@@ -6,7 +6,10 @@ schemas and value distributions as the engine's test tables:
 - documents(doc_id, text, lang, source, n_chars): 10-99 words from a
   30-word vocabulary, about 5% tagged with trailing "dup" tokens;
 - embeddings(vec_id, embedding FLOAT[64], label): unit vectors with a
-  weak pull towards one of ten centres.
+  weak pull towards one of ten centres;
+- orders(o_orderkey, o_custkey) and lineitem(l_orderkey, l_suppkey):
+  the purchase graph's columns, at the test tables' sf0.01 sizes (1,500
+  customers, 100 suppliers, 15,000 orders of 4 lines each).
 
 The seed fixes every value; the sizes are fixed, so two seeds give two
 instances of the same distribution at the same scale.
@@ -27,6 +30,10 @@ SIZES = {
     "documents": 1500,
     "embeddings": 1500,
     "dim": 64,
+    "orders": 15000,
+    "lines_per_order": 4,
+    "customers": 1500,
+    "suppliers": 100,
 }
 
 
@@ -63,6 +70,20 @@ def embeddings(rng, n, dim):
     })
 
 
+def orders(rng, n, customers):
+    return pa.table({
+        "o_orderkey": pa.array(np.arange(1, n + 1, dtype=np.int64)),
+        "o_custkey": pa.array(rng.integers(1, customers + 1, size=n)),
+    })
+
+
+def lineitem(rng, n_orders, per_order, suppliers):
+    return pa.table({
+        "l_orderkey": pa.array(np.repeat(np.arange(1, n_orders + 1, dtype=np.int64), per_order)),
+        "l_suppkey": pa.array(rng.integers(1, suppliers + 1, size=n_orders * per_order)),
+    })
+
+
 def generate(out_dir, seed):
     """Write the tables under out_dir; return their row counts and bytes."""
     os.makedirs(out_dir, exist_ok=True)
@@ -71,6 +92,8 @@ def generate(out_dir, seed):
     tables = {
         "documents": documents(rng, s["documents"]),
         "embeddings": embeddings(rng, s["embeddings"], s["dim"]),
+        "orders": orders(rng, s["orders"], s["customers"]),
+        "lineitem": lineitem(rng, s["orders"], s["lines_per_order"], s["suppliers"]),
     }
     info = {}
     for name, t in tables.items():

@@ -20,11 +20,15 @@ object Main {
   /** Everything one run reports back to the front end. */
   final class Result {
     val info = mutable.LinkedHashMap.empty[String, Any]
-    val setupReps = mutable.ArrayBuffer.empty[Double]
+    var jvmStartMs = 0L
     var sessionS = 0.0
+    var setupS = 0.0
     // one row per timed operation: kind, due/start/end ms from window start, ok
     val ops = mutable.ArrayBuffer.empty[Map[String, Any]]
     val layers = mutable.LinkedHashMap.empty[String, Double]
+    // analytics query -> DuckDB twin SQL, for the results dumped under
+    // <workDir>/twins/<query>
+    val twins = mutable.LinkedHashMap.empty[String, String]
     val failures = mutable.ArrayBuffer.empty[String]
     var checks = 0L
     val windowS = mutable.LinkedHashMap.empty[String, Double]
@@ -38,6 +42,8 @@ object Main {
       ok
     }
     def op(row: Map[String, Any]): Unit = synchronized { ops += row }
+    /** Set-up ends here: the first timed operation starts next. */
+    def setupDone(): Unit = setupS = (System.currentTimeMillis() - jvmStartMs) / 1e3
   }
 
   def nowMs(t0: Long): Double = (System.nanoTime() - t0) / 1e6
@@ -65,10 +71,11 @@ object Main {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val res = new Result
+    res.jvmStartMs = jvmStart
     res.sessionS = (System.currentTimeMillis() - jvmStart) / 1e3
     res.info ++= Seq("workload" -> workload, "cores" -> cpus,
       "clients" -> cpus, "window_s" -> seconds, "traced" -> traced)
-    val w = new Workloads(spark, dataDir, res, traced, seconds, cpus)
+    val w = new Workloads(spark, dataDir, workDir, res, traced, seconds, cpus)
     try workload match {
       case "build" => w.build()
       case "serve" => w.serve(schedule)
@@ -86,11 +93,12 @@ object Main {
   def toMap(r: Result): Map[String, Any] = Map(
     "info" -> r.info.toMap,
     "session_s" -> r.sessionS,
-    "setup_reps_s" -> r.setupReps.toSeq,
+    "setup_s" -> r.setupS,
     "window_s" -> r.windowS.toMap,
     "cpu_ms" -> r.cpuMs.toMap,
     "ops" -> r.ops.toSeq,
     "layers" -> r.layers.toMap,
+    "twins" -> r.twins.toMap,
     "checks" -> r.checks,
     "failures" -> r.failures.toSeq,
     "rss_peak_mb" -> r.rssPeakMb)

@@ -14,11 +14,15 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *
   * One instance is registered as both a [[SparkListener]] (jobs, stages,
   * tasks, shuffle, spill, GC, queueing) and a [[QueryExecutionListener]]
-  * (Catalyst phases of every executed query). Counters only accumulate
-  * while `armed`, so warm-up and set-up work stay out of the numbers.
+  * (Catalyst phases of every executed query). It is registered right
+  * before the traced operations, so set-up and warm-up work never reach
+  * it. A query's listener event carries no local properties, so Catalyst
+  * time is not tagged: [[takeCatalystMs]] returns the time since its last
+  * call, for traced sections that run one after another. Spark delivers
+  * all these events asynchronously: read the counters only after
+  * [[awaitDrained]].
   */
 final class Trace extends SparkListener with QueryExecutionListener {
-  @volatile var armed = false
 
   final class Acc {
     var jobs = 0L
@@ -35,24 +39,33 @@ final class Trace extends SparkListener with QueryExecutionListener {
   private val byTag = mutable.HashMap.empty[String, Acc]
   private val jobTag = mutable.HashMap.empty[Int, String]
   private val jobSubmit = mutable.HashMap.empty[Int, Long]
+  private val openJobs = mutable.HashSet.empty[Int]
   private val stageJob = mutable.HashMap.empty[Int, Int]
   private val stageTaskMs = mutable.HashMap.empty[Int, mutable.ArrayBuffer[Long]]
   private var catalystMs = 0.0
+  private var lastEventNs = System.nanoTime()
 
   private def acc(tag: String): Acc = byTag.getOrElseUpdate(tag, new Acc)
+  private def seen(): Unit = lastEventNs = System.nanoTime()
 
   override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
-    if (armed) {
-      val tag = Option(e.properties).flatMap(p => Option(p.getProperty(Trace.TagKey)))
-        .getOrElse("untagged")
-      jobTag(e.jobId) = tag
-      jobSubmit(e.jobId) = e.time
-      e.stageIds.foreach(s => stageJob(s) = e.jobId)
-      acc(tag).jobs += 1
-    }
+    seen()
+    val tag = Option(e.properties).flatMap(p => Option(p.getProperty(Trace.TagKey)))
+      .getOrElse("untagged")
+    jobTag(e.jobId) = tag
+    jobSubmit(e.jobId) = e.time
+    openJobs += e.jobId
+    e.stageIds.foreach(s => stageJob(s) = e.jobId)
+    acc(tag).jobs += 1
+  }
+
+  override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
+    seen()
+    openJobs -= e.jobId
   }
 
   override def onTaskStart(e: SparkListenerTaskStart): Unit = synchronized {
+    seen()
     for (job <- stageJob.get(e.stageId); t0 <- jobSubmit.remove(job)) {
       val a = acc(jobTag(job))
       a.queueMs += math.max(0L, e.taskInfo.launchTime - t0)
@@ -61,6 +74,7 @@ final class Trace extends SparkListener with QueryExecutionListener {
   }
 
   override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
+    seen()
     for (job <- stageJob.get(e.stageId); m <- Option(e.taskMetrics)) {
       val a = acc(jobTag(job))
       a.tasks += 1
@@ -75,12 +89,21 @@ final class Trace extends SparkListener with QueryExecutionListener {
 
   override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
     synchronized {
-      if (armed) {
-        catalystMs += Trace.catalystMs(qe)
-      }
+      seen()
+      catalystMs += Trace.catalystMs(qe)
     }
 
   override def onFailure(funcName: String, qe: QueryExecution, error: Exception): Unit = ()
+
+  /** Block until every job seen so far has ended and no event has
+    * arrived for `quietMs`, so the counters hold all the traced work.
+    */
+  def awaitDrained(quietMs: Long = 500, timeoutMs: Long = 30000): Unit = {
+    val deadline = System.nanoTime() + timeoutMs * 1000000L
+    def drained = synchronized(openJobs.isEmpty &&
+      System.nanoTime() - lastEventNs > quietMs * 1000000L)
+    while (!drained && System.nanoTime() < deadline) Thread.sleep(50)
+  }
 
   /** Totals over every tag whose name satisfies `keep`. */
   def totals(keep: String => Boolean): Acc = synchronized {
@@ -94,17 +117,24 @@ final class Trace extends SparkListener with QueryExecutionListener {
     t
   }
 
-  /** Worst max/median task-duration ratio over stages with ≥ 2 tasks. */
-  def taskSkew: Double = synchronized {
-    val ratios = stageTaskMs.values.filter(_.size >= 2).map { ds =>
-      val s = ds.sorted
-      val med = math.max(1L, s(s.size / 2))
-      s.last.toDouble / med
+  /** Catalyst time of the queries that succeeded since the last call. */
+  def takeCatalystMs(): Double = synchronized {
+    val ms = catalystMs
+    catalystMs = 0.0
+    ms
+  }
+
+  /** Worst max/median task-duration ratio over the stages with ≥ 2
+    * tasks of jobs whose tag satisfies `keep`.
+    */
+  def taskSkew(keep: String => Boolean): Double = synchronized {
+    val ratios = stageTaskMs.collect {
+      case (stage, ds) if ds.size >= 2 && stageJob.get(stage).exists(j => keep(jobTag(j))) =>
+        val s = ds.sorted
+        s.last.toDouble / math.max(1L, s(s.size / 2))
     }
     if (ratios.isEmpty) 1.0 else ratios.max
   }
-
-  def catalystTotalMs: Double = synchronized(catalystMs)
 }
 
 object Trace extends AdaptiveSparkPlanHelper {

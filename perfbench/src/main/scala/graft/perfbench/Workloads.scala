@@ -11,22 +11,23 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{Pipeline, SparkEntry, Tables}
+import graft.{Pipeline, Scratch, SparkEntry, Tables}
 import graft.operators.{AnnIvf, IndexStore}
 import graft.operators.clustering.GraphBuild
-import graft.queries.{CorpusQueries, VectorQueries}
+import graft.queries.{CorpusQueries, DedupQueries, VectorQueries}
 
 /** The benchmark's workloads. Each runs its set-up, then its timed
   * operations, and records them in `res`. Output checks run on every
   * timed operation; a failed check counts the operation as failed.
   */
-final class Workloads(spark: SparkSession, dir: String, res: Main.Result,
-    traced: Boolean, seconds: Double, clients: Int) {
+final class Workloads(spark: SparkSession, dir: String, workDir: String,
+    res: Main.Result, traced: Boolean, seconds: Double, clients: Int) {
   import Main.{nowMs, secs}
 
   private val sc = spark.sparkContext
   private val trace = new Trace
-  private val WarmupMs = 6000.0
+  private val WarmupMs = 14000.0
+  private val MinBatchReps = 3
 
   private def tagged[T](tag: String)(body: => T): T = {
     val prev = sc.getLocalProperty(Trace.TagKey)
@@ -34,25 +35,16 @@ final class Workloads(spark: SparkSession, dir: String, res: Main.Result,
     try body finally sc.setLocalProperty(Trace.TagKey, prev)
   }
 
-  /** Register the listeners and count from here on. */
+  /** Register the listeners: they count everything from here on. */
   private def startTrace(): Unit = {
     sc.addSparkListener(trace)
     spark.listenerManager.register(trace)
-    trace.armed = true
   }
 
   private def coldReset(): Unit = {
     SparkEntry.clearCaches()
     spark.catalog.clearCache()
   }
-
-  /** Run the workload's set-up `n` times, one set-up time sample each. */
-  private def setup(n: Int)(body: => Unit): Unit =
-    for (_ <- 1 to n) {
-      val t0 = System.nanoTime()
-      tagged("setup")(body)
-      res.setupReps += secs(t0)
-    }
 
   private def consume(df: DataFrame): Unit =
     df.queryExecution.toRdd.foreachPartition((it: Iterator[_]) => it.foreach(_ => ()))
@@ -63,13 +55,17 @@ final class Workloads(spark: SparkSession, dir: String, res: Main.Result,
   private def median(xs: Seq[Double]): Double =
     if (xs.isEmpty) 0.0 else { val s = xs.sorted; s(s.size / 2) }
 
-  /** Spark-side layer counters of workload `w`, per timed operation. */
+  /** Spark-side layer counters of workload `w`, per timed operation,
+    * for the traced section that just ran: drains the listener events,
+    * then reads the counters of the jobs whose tag satisfies `keep`.
+    */
   private def workloadLayers(w: String, ops: Int, keep: String => Boolean): Unit = {
+    trace.awaitDrained()
     val t = trace.totals(keep)
     val n = math.max(1, ops).toDouble
     val mb = 1e6 * n
     res.layers ++= Seq(
-      s"$w.catalyst_ms" -> trace.catalystTotalMs / n,
+      s"$w.catalyst_ms" -> trace.takeCatalystMs() / n,
       s"$w.jobs" -> t.jobs / n,
       s"$w.tasks" -> t.tasks / n,
       s"$w.job_queue_ms" -> (if (t.queuedJobs == 0) 0.0 else t.queueMs / t.queuedJobs),
@@ -78,7 +74,7 @@ final class Workloads(spark: SparkSession, dir: String, res: Main.Result,
       s"$w.input_mb" -> t.input / mb,
       s"$w.output_mb" -> t.output / mb,
       s"$w.gc_ms" -> t.gcMs / n,
-      s"$w.task_skew" -> trace.taskSkew)
+      s"$w.task_skew" -> trace.taskSkew(keep))
   }
 
   private def registerTables(): Unit =
@@ -164,7 +160,7 @@ final class Workloads(spark: SparkSession, dir: String, res: Main.Result,
 
   /** Append adds exactly the delta's rows to the four growing artifacts. */
   private def checkAppend(before: Map[String, (Long, Long)],
-      after: Map[String, (Long, Long)]): Unit = {
+      after: Map[String, (Long, Long)]): Boolean = {
     val st = CorpusQueries.bm25UpsertState(spark, dir)
     val nVec = VectorQueries.upsertAppended(spark, dir).count()
     val delta = Map("ivf_assigned" -> nVec, "pq_codes" -> nVec,
@@ -173,30 +169,107 @@ final class Workloads(spark: SparkSession, dir: String, res: Main.Result,
       "append: row counts differ from before + delta")
   }
 
-  /** One batch build in a fresh process: it pays class loading, JIT and
-    * code generation, as a batch job does. A traced run then builds
-    * twice more, warm, without and with the listeners: the difference is
+  // ------------------------------------------------------------ analytics
+
+  /** The analytics queries each batch iteration runs after the E1 build:
+    * the iterative graph and dedup paths no other workload reaches.
+    * PageRank iterates joins over the purchase graph (Pregel's
+    * join-per-superstep shape), q_dedup_cc runs GraphX Pregel connected
+    * components, and q_dedup_minhash is the MinHash-LSH band join.
+    */
+  private val AnalyticsQueries = Seq("q_graph_pagerank", "q_dedup_cc", "q_dedup_minhash")
+
+  /** Order-independent digest of a result's rows. */
+  private def rowsHash(rows: Array[Row]): String = {
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    rows.map(_.toString).sorted.foreach(r => md.update((r + "\n").getBytes("UTF-8")))
+    md.digest().map(b => f"$b%02x").mkString
+  }
+
+  /** One pass over the analytics queries, each materialized in full.
+    * Per-query state (scratch persists, the dedup bucket cache) is
+    * dropped before each query, as Bench drops it. Returns each query's
+    * seconds and rows.
+    */
+  private def analyticsPass(): Seq[(String, Double, DataFrame, Array[Row])] =
+    for (q <- AnalyticsQueries) yield {
+      Scratch.releaseAll()
+      DedupQueries.clearCache()
+      val t0 = System.nanoTime()
+      val df = SparkEntry.queries(q)(spark, dir)
+      val rows = df.collect()
+      (q, secs(t0), df, rows)
+    }
+
+  // ---------------------------------------------------------------- build
+
+  private var firstHashes: Map[String, String] = Map.empty
+
+  /** The E1 build of a batch iteration, from cold caches: every memo is
+    * dropped first. Records one `build` operation.
+    */
+  private def buildStep(win: String): Unit = {
+    val (st, ok) = tagged(s"$win.build")(buildOnce())
+    res.op(Map("window" -> win, "kind" -> "build", "due_ms" -> 0.0,
+      "start_ms" -> 0.0, "end_ms" -> st("total_s") * 1e3, "ok" -> ok) ++
+      st.collect { case (k, v) if k != "total_s" => s"build.$k" -> v })
+  }
+
+  /** The analytics pass of a batch iteration. The first pass fixes each
+    * query's digest; later ones must match it. Records one `analytics`
+    * operation and returns the pass.
+    */
+  private def analyticsStep(win: String): Seq[(String, Double, DataFrame, Array[Row])] = {
+    val pass = tagged(s"$win.analytics")(analyticsPass())
+    val hashes = pass.map { case (q, _, _, rows) => q -> rowsHash(rows) }.toMap
+    if (firstHashes.isEmpty) firstHashes = hashes
+    val ok = AnalyticsQueries.map(q => res.check(hashes(q) == firstHashes(q),
+      s"analytics $q: rows differ from the first pass")).forall(identity)
+    res.op(Map("window" -> win, "kind" -> "analytics", "due_ms" -> 0.0,
+      "start_ms" -> 0.0, "end_ms" -> pass.map(_._2).sum * 1e3, "ok" -> ok) ++
+      pass.map { case (q, t, _, _) => s"analytics.${q}_s" -> t })
+    pass
+  }
+
+  /** Dump each result of an analytics pass, with its DuckDB twin SQL,
+    * for the front end's twin check.
+    */
+  private def dumpTwins(pass: Seq[(String, Double, DataFrame, Array[Row])]): Unit = {
+    val twins = SparkEntry.oracleSql
+    for ((q, _, df, rows) <- pass if twins.contains(q)) {
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
+        .coalesce(1).write.parquet(Paths.get(workDir, "twins", q).toString)
+      res.twins(q) = twins(q)
+    }
+  }
+
+  /** Batch iterations (E1 build, then the analytics pass) from cold
+    * caches, in one process. The first iteration pays class loading, JIT
+    * and code generation and is not timed; it also dumps the analytics
+    * results for the twin check. Then at least three iterations, and as
+    * many as `seconds` holds, are timed. A traced run adds one iteration
+    * with the listeners on: its difference from the last untraced one is
     * the tracing overhead.
     */
   def build(): Unit = {
-    setup(3)(registerTables())
-    def timedBuild(win: String): Map[String, Double] = {
-      val (st, ok) = tagged("build")(buildOnce())
-      res.op(Map("window" -> win, "kind" -> "build", "due_ms" -> 0.0,
-        "start_ms" -> 0.0, "end_ms" -> st("total_s") * 1e3, "ok" -> ok))
-      st
-    }
+    registerTables()
+    buildStep("setup")
+    dumpTwins(analyticsStep("setup"))
+    res.setupDone()
     val cpu0 = Main.cpuMs()
-    val cold = timedBuild("plain")
-    res.windowS("plain") = cold("total_s")
+    val t0 = System.nanoTime()
+    var n = 0
+    while (n < MinBatchReps || secs(t0) < seconds) {
+      buildStep("plain"); analyticsStep("plain"); n += 1
+    }
+    res.windowS("plain") = secs(t0)
     res.cpuMs("plain") = Main.cpuMs() - cpu0
-    for ((k, v) <- cold if k != "total_s") res.layers(s"build.$k") = v
     if (traced) {
-      res.windowS("warm") = timedBuild("warm")("total_s")
       startTrace()
-      res.windowS("traced") = timedBuild("traced")("total_s")
-      trace.armed = false
-      workloadLayers("build", 1, _ == "build")
+      buildStep("traced")
+      workloadLayers("build", 1, _ == "traced.build")
+      analyticsStep("traced")
+      workloadLayers("analytics", 1, _ == "traced.analytics")
     }
   }
 
@@ -211,10 +284,9 @@ final class Workloads(spark: SparkSession, dir: String, res: Main.Result,
   private var ivfStore: AnnIvf.IvfIndex = _
 
   /** Build what the reads serve, timed per stage: the movie tree, the
-    * in-session IVF memo, and the durable store through its lifecycle
-    * (save → load → append the canonical delta → compact → load). The
-    * `ann_store` reads use the compacted store. Every stage's output is
-    * checked.
+    * in-session IVF memo, and the durable store (PQ and BM25 builds,
+    * save, load), which the `ann_store` reads use. Every stage's output
+    * is checked.
     */
   private def serveSetup(): Unit = {
     coldReset()
@@ -236,22 +308,11 @@ final class Workloads(spark: SparkSession, dir: String, res: Main.Result,
     stage("pq_s")(artifact("build_pq_codebooks"))
     stage("bm25_s")(artifact("build_bm25_index"))
     val saved = stage("store_write_s")(IndexStore.save(spark, dir))
-    stage("store_load_s")(IndexStore.load(spark, saved).manifest.collect())
-    val appended = stage("append_s")(IndexStore.append(spark, dir))
-    val compacted = stage("compact_s")(IndexStore.compact(spark, dir))
-    ivfStore = stage("compacted_load_s") {
-      val l = IndexStore.load(spark, compacted); l.manifest.collect(); l.ivf
+    ivfStore = stage("store_load_s") {
+      val l = IndexStore.load(spark, saved); l.manifest.collect(); l.ivf
     }
     for ((k, v) <- stage.times) res.layers(s"index.$k") = v
-    val bytes = (r: String) => dataFiles(r).map(Files.size).sum.toDouble
-    res.layers("index.store_bytes") = bytes(saved)
-    res.layers("index.appended_bytes") = bytes(appended) - bytes(saved)
-    res.layers("index.files_appended") = (dataFiles(appended).size - dataFiles(saved).size).toDouble
-    res.layers("index.files_compacted") = dataFiles(compacted).size.toDouble
     checkManifest(saved)
-    checkAppend(manifestOf(saved), manifestOf(appended))
-    res.check(manifestOf(compacted) == manifestOf(appended), "compaction changed the manifest")
-    checkManifest(compacted)
 
     val docIds = Tables.documents(spark, dir).select("doc_id").collect().map(_.getLong(0)).toSet
     vectors = Tables.embeddings(spark, dir).select("vec_id", "embedding").collect()
@@ -316,7 +377,7 @@ final class Workloads(spark: SparkSession, dir: String, res: Main.Result,
 
   /** Open loop: each request is handed at its due time to a pool of
     * `clients` threads, whatever the state of earlier requests, and its
-    * latency runs from the due time.
+    * latency runs from the due time. Jobs are tagged `<win>.<kind>`.
     */
   private def openLoop(win: String, due: Array[Main.Req]): Unit = {
     val pool = Executors.newFixedThreadPool(clients)
@@ -331,7 +392,7 @@ final class Workloads(spark: SparkSession, dir: String, res: Main.Result,
         def run(): Unit = {
           val startMs = nowMs(t0)
           val (ok, layer) =
-            try tagged(r.kind)(request(r.kind, r.arg))
+            try tagged(s"$win.${r.kind}")(request(r.kind, r.arg))
             catch { case e: Throwable => res.fail(s"${r.kind}: $e"); (false, Map.empty[String, Double]) }
           res.op(Map("window" -> win, "kind" -> r.kind, "due_ms" -> r.dueMs,
             "sent_ms" -> sentMs, "start_ms" -> startMs, "end_ms" -> nowMs(t0),
@@ -350,42 +411,102 @@ final class Workloads(spark: SparkSession, dir: String, res: Main.Result,
     res.cpuMs(win) = Main.cpuMs() - cpu0
   }
 
-  private def closedLoop(reqs: Array[Main.Req]): Unit = {
+  /** All clients send requests back to back for the warm-up time;
+    * returns the number of requests served.
+    */
+  private def closedLoop(reqs: Array[Main.Req]): Int = {
     val next = new AtomicInteger
+    val served = new AtomicInteger
     val t0 = System.nanoTime()
     val threads = (1 to clients).map { _ =>
       new Thread(() => while (nowMs(t0) < WarmupMs) {
         val r = reqs(next.getAndIncrement() % reqs.length)
-        try tagged(r.kind)(request(r.kind, r.arg))
+        try { tagged(r.kind)(request(r.kind, r.arg)); served.incrementAndGet() }
         catch { case e: Throwable => res.fail(s"warm-up ${r.kind}: $e") }
       })
     }
     threads.foreach(_.start())
     threads.foreach(_.join())
+    served.get
+  }
+
+  /** One durable-index write cycle: drop the store memos, then save,
+    * append the canonical delta, compact and load. Append must add
+    * exactly the delta's rows, and compaction must keep the manifest.
+    * Records the stage times and the store's files and bytes.
+    */
+  private def writeCycle(t0: Long): Unit = {
+    val startMs = nowMs(t0)
+    val stage = new Stages
+    IndexStore.clearCache()
+    val saved = stage("save_s")(IndexStore.save(spark, dir))
+    val before = manifestOf(saved)
+    val appended = stage("append_s")(IndexStore.append(spark, dir))
+    val compacted = stage("compact_s")(IndexStore.compact(spark, dir))
+    stage("load_s")(IndexStore.load(spark, compacted).manifest.collect())
+    val after = manifestOf(appended)
+    val ok = checkAppend(before, after) &
+      res.check(manifestOf(compacted) == after, "compaction changed the manifest")
+    val bytes = (r: String) => dataFiles(r).map(Files.size).sum.toDouble
+    val files = (r: String) => dataFiles(r).size.toDouble
+    res.op(Map("window" -> "writes", "kind" -> "write_cycle", "due_ms" -> startMs,
+      "start_ms" -> startMs, "end_ms" -> nowMs(t0), "ok" -> ok,
+      "store_bytes" -> bytes(saved), "appended_bytes" -> (bytes(appended) - bytes(saved)),
+      "upsert.files_appended" -> (files(appended) - files(saved)),
+      "upsert.files_compacted" -> files(compacted)) ++
+      stage.times.map { case (k, v) => s"upsert.$k" -> v })
+  }
+
+  /** Reads beside writes: the open loop runs while one writer thread
+    * loops the write cycle, finishing at least one. The store root the
+    * `ann_store` reads use is rewritten here, so each of those requests
+    * takes the kind of another request, drawn by its argument: the rate
+    * stays, and the other kinds keep their relative shares.
+    */
+  private def besideWrites(due: Array[Main.Req]): Unit = {
+    val others = due.map(_.kind).filter(_ != "ann_store")
+    val reads = due.map(r => if (r.kind != "ann_store") r
+      else r.copy(kind = pick(others, r.arg)))
+    @volatile var stop = false
+    val t0 = System.nanoTime()
+    val writer = new Thread(() => {
+      var cycles = 0
+      while (!stop || cycles == 0) {
+        try tagged("writes.writer")(writeCycle(t0))
+        catch { case e: Throwable => res.fail(s"write cycle: $e"); stop = true }
+        cycles += 1
+      }
+    })
+    writer.start()
+    openLoop("writes", reads)
+    stop = true
+    writer.join()
   }
 
   def serve(schedule: Array[Main.Req]): Unit = {
     val kinds = schedule.map(_.kind).distinct.toSeq.sorted
-    // one repetition: the cold set-up takes about 35 s on 4 cores, and a
-    // second one would not fit the run's time budget
-    setup(1)(serveSetup())
+    serveSetup()
     res.info("tree_nodes") = treeIds.length
     val due = schedule.filter(_.dueMs < seconds * 1000.0)
     res.info("offered") = due.length
     // warm-up: all clients back to back on other nodes, documents and
-    // probes, untimed, so the request paths are compiled and the JIT has
-    // settled before the clock starts
-    tagged("warmup")(closedLoop(due.map(r => r.copy(arg = r.arg + 1))))
+    // probes, untimed. The request paths keep getting faster for about
+    // half a minute of load (JIT, generated-code compilation); after 6 s
+    // the timed window still ran 20-30% slower than a later one, and
+    // varied more between runs
+    val served = closedLoop(due.map(r => r.copy(arg = r.arg + 1)))
+    res.info("warmup_req_per_s") = served / (WarmupMs / 1e3)
+    res.setupDone()
     openLoop("plain", due)
     if (traced) {
       startTrace()
       openLoop("traced", due)
-      trace.armed = false
+      trace.awaitDrained()
       val reads = res.ops.filter(_("window") == "traced")
       for (k <- kinds) {
         val ops = reads.filter(o => o("kind") == k && o.contains("frame_ms"))
         def med(f: String) = median(ops.map(_(f).asInstanceOf[Double]).toSeq)
-        val t = trace.totals(_ == k)
+        val t = trace.totals(_ == s"traced.$k")
         val n = math.max(1, ops.size).toDouble
         res.layers ++= Seq(
           s"serve.$k.frame_ms" -> med("frame_ms"),
@@ -395,7 +516,12 @@ final class Workloads(spark: SparkSession, dir: String, res: Main.Result,
           s"serve.$k.tasks" -> t.tasks / n,
           s"serve.$k.rows_read_per_row" -> med("rows_read") / math.max(1.0, med("rows_out")))
       }
-      workloadLayers("serve", reads.size, kinds.contains)
+      workloadLayers("serve", reads.size, kinds.map(k => s"traced.$k").contains)
+      besideWrites(due)
+      trace.awaitDrained()
+      val q = trace.totals(t => t.startsWith("writes.") && t != "writes.writer")
+      res.layers("upsert.read_job_queue_ms") =
+        if (q.queuedJobs == 0) 0.0 else q.queueMs / q.queuedJobs
     }
   }
 }

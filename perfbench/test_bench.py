@@ -58,9 +58,9 @@ class OpenLoop(unittest.TestCase):
     def test_schedule_is_seeded_poisson_at_the_rate(self):
         with tempfile.TemporaryDirectory() as d:
             a, b, c = (os.path.join(d, x) for x in "abc")
-            n = run.write_schedule(a, "serve", 3, 200)
-            run.write_schedule(b, "serve", 3, 200)
-            run.write_schedule(c, "serve", 4, 200)
+            n = run.write_schedule(a, 3, 200)
+            run.write_schedule(b, 3, 200)
+            run.write_schedule(c, 4, 200)
             with open(a) as fa, open(b) as fb, open(c) as fc:
                 ta, tb, tc = fa.read(), fb.read(), fc.read()
         self.assertEqual(ta, tb)
@@ -71,8 +71,8 @@ class OpenLoop(unittest.TestCase):
         dues = [float(r[0]) for r in rows]
         self.assertEqual(dues, sorted(dues))
         self.assertTrue(all(0 <= x < 200_000 for x in dues))
-        for k, share in run.MIXES["serve"].items():
-            self.assertEqual(sum(r[1] == k for r in rows), round(n * share))
+        for k, share in run.SERVE_MIX.items():
+            self.assertLess(abs(sum(r[1] == k for r in rows) - n * share), 1)
 
 
 class FailureAccounting(unittest.TestCase):
@@ -91,7 +91,7 @@ class FailureAccounting(unittest.TestCase):
         self.assertEqual(stats.latency_ms(op), stats.MISSED_MS)
 
     def test_failures_move_the_weighted_median(self):
-        raw = {"ops": [read_op(0, 0, 10, kind=k) for k in run.MIXES["serve"]] * 3}
+        raw = {"ops": [read_op(0, 0, 10, kind=k) for k in run.SERVE_MIX] * 3}
         base = run.op_ms("serve", raw, "plain")
         raw["ops"] += [read_op(0, 0, 10, ok=False, kind="e2")] * 4
         self.assertGreater(run.op_ms("serve", raw, "plain"), base)
@@ -115,11 +115,24 @@ class Spec(unittest.TestCase):
         with open(os.path.join(run.ROOT, "BENCHMARK.json")) as f:
             spec = json.load(f)
         self.assertEqual([w["name"] for w in spec["workloads"]], list(run.WORKLOADS))
-        raw = {"ops": [read_op(0, 0, 10, kind=k) for k in run.MIXES["serve"]],
-               "session_s": 1.0, "setup_reps_s": [2.0], "cpu_ms": {"plain": 5.0},
-               "rss_peak_mb": 100.0}
+        raw = {"ops": [read_op(0, 0, 10, kind=k) for k in run.SERVE_MIX],
+               "setup_s": 2.0}
         self.assertEqual(sorted(run.end_to_end("serve", raw)),
                          sorted(m["name"] for m in spec["end_to_end"]))
+
+    def test_build_op_is_one_batch_iteration(self):
+        # median E1 build plus median analytics pass
+        ops = [read_op(0, 0, t, kind="build") for t in (4000, 3000, 5000)]
+        ops += [read_op(0, 0, t, kind="analytics") for t in (2000, 9000, 1000)]
+        self.assertEqual(run.op_ms("build", {"ops": ops}, "plain"), 6000)
+
+
+class TwinCheck(unittest.TestCase):
+    def test_hash_ignores_row_and_column_order(self):
+        a = run.table_hash([(1, "x"), (2, "y")], ["k", "v"])
+        b = run.table_hash([("y", 2), ("x", 1)], ["v", "k"])
+        self.assertEqual(a, b)
+        self.assertNotEqual(a, run.table_hash([(1, "x"), (2, "z")], ["k", "v"]))
 
 
 if __name__ == "__main__":
