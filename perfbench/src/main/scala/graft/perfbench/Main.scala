@@ -3,6 +3,7 @@ package graft.perfbench
 import java.nio.file.{Files, Paths}
 
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.SparkSession
 
@@ -86,6 +87,7 @@ object Main {
         e.printStackTrace()
     }
     res.rssPeakMb = peakRssMb()
+    res.info("code_cache_peak_mb") = codeCachePeakMb()
     Files.writeString(Paths.get(outPath), Json.render(toMap(res)))
     spark.stop()
   }
@@ -117,6 +119,13 @@ object Main {
       .find(_.startsWith("VmHWM:"))
       .map(_.split("\\s+")(1).toDouble / 1024.0).getOrElse(0.0)
   }
+
+  /** Peak use of the JIT code cache (all its heaps), in MB: a full cache
+    * makes requests fail, so each run reports how close it came. */
+  def codeCachePeakMb(): Double =
+    java.lang.management.ManagementFactory.getMemoryPoolMXBeans.asScala
+      .filter(p => p.getName.startsWith("CodeHeap") || p.getName == "CodeCache")
+      .map(_.getPeakUsage.getUsed).sum / 1048576.0
 
   /** CPU time of this process (all threads), in ms. */
   def cpuMs(): Double =
